@@ -57,12 +57,16 @@ object GraftApi {
   def exactDupGroups(docs: DataFrame): DataFrame = Dedup.exactDupGroupsOf(docs)
 
   /** 4-permutation universal-hash MinHash signatures over word 3-gram
-    * shingles — (doc_id, mh0..mh3). */
+    * shingles — (doc_id, mh0..mh3), one row per input row. `doc_id` must
+    * be unique per row: rows that share a doc_id are not merged into one
+    * signature. */
   def minhashSignatures(docs: DataFrame): DataFrame = Dedup.minhashOf(docs)
 
   /** Near-duplicate pairs: banded-LSH candidates verified by exact Jaccard
     * ≥ `minJaccardBp` basis points — (id_a, id_b, inter, uni, jac_bp).
-    * Candidates come from band-key equi-joins, never an all-pairs product. */
+    * Candidates come from band-key equi-joins, never an all-pairs product.
+    * `doc_id` must be unique per row: each row is signed on its own, so
+    * rows that share a doc_id are not merged into one document. */
   def nearDupPairs(docs: DataFrame, minJaccardBp: Int = 8000): DataFrame =
     Dedup.nearDupPairsOf(docs, minJaccardBp)
 
@@ -77,14 +81,16 @@ object GraftApi {
 
   /** Duplicate clusters: connected components over [[nearDupPairs]] —
     * (doc_id, cluster_id = min reachable doc_id, n_members). Keep
-    * `doc_id == cluster_id`, drop the rest. */
+    * `doc_id == cluster_id`, drop the rest. `doc_id` must be unique per
+    * row, as for [[nearDupPairs]]. */
   def dedupClusters(docs: DataFrame, minJaccardBp: Int = 8000): DataFrame =
     dedupClustersFromPairs(nearDupPairs(docs, minJaccardBp).select("id_a", "id_b"))
 
   /** The deduplicated corpus: `docs` (doc_id, text, …) minus every
     * non-canonical near-dup cluster member (canonical = min doc_id per
     * cluster). Non-dup rows pass through the LEFT ANTI probe untouched —
-    * the drop list is only the docs that HAVE a near-dup. */
+    * the drop list is only the docs that HAVE a near-dup. `doc_id` must be
+    * unique per row, as for [[nearDupPairs]]. */
   def dedupedCorpus(docs: DataFrame, minJaccardBp: Int = 8000): DataFrame =
     Dedup.dedupedCorpusOf(docs, minJaccardBp)
 

@@ -91,9 +91,10 @@ object Dedup {
 
   // ---- word 3-gram shingles (distinct per doc) ----
 
-  /** Word 3-gram shingles (distinct per doc) of any (doc_id, text) frame —
-    * single definition shared by d2/d3 (dup-injected corpus) and d6 (raw
-    * documents) so the <3-word fallback can't drift between them.
+  /** A row's word 3-gram shingles as ONE array expression over `text`
+    * (in text order, repeats kept; a <3-word text is its own single
+    * shingle) — the single shingle definition behind both [[shinglesOf]]
+    * and [[sigSetsOf]], so the <3-word fallback can't drift between them.
     *
     * Construction is arrays_zip over three SHIFTED SLICES of the split
     * array, not `transform(sequence, i -> slice(split(text), …))`: a
@@ -104,17 +105,21 @@ object Dedup {
     * number of times per row and the lambda touches only its struct
     * argument. Measured at sf1 (quiet host, stash A/B): d2 2.71 → 0.98 s
     * warm, d3 9.71 → 5.88 s, d6 6.26 → 5.54 s. */
+  private val shingleArr: String =
+    "CASE WHEN size(split(text, ' ')) >= 3 " +
+      "THEN transform(arrays_zip(" +
+      "slice(split(text, ' '), 1, size(split(text, ' ')) - 2), " +
+      "slice(split(text, ' '), 2, size(split(text, ' ')) - 2), " +
+      "slice(split(text, ' '), 3, size(split(text, ' ')) - 2)), " +
+      "s -> concat(s['0'], ' ', s['1'], ' ', s['2'])) " +
+      "ELSE array(text) END"
+
+  /** Word 3-gram shingles (distinct per doc) of any (doc_id, text) frame,
+    * one row per (doc_id, shingle) — for the shingle-keyed joins and
+    * document-frequency aggregates (d6, d9, d16, d20, t23, t24). The MinHash
+    * signature path does not explode: see [[sigSetsOf]]. */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), explode(
-        when(size(split(col("text"), " ")) >= 3,
-          expr("transform(" +
-            "arrays_zip(slice(split(text, ' '), 1, size(split(text, ' ')) - 2)," +
-            "           slice(split(text, ' '), 2, size(split(text, ' ')) - 2)," +
-            "           slice(split(text, ' '), 3, size(split(text, ' ')) - 2))," +
-            " s -> concat(s['0'], ' ', s['1'], ' ', s['2']))"))
-          .otherwise(array(col("text")))).as("shingle"))
-      .distinct()
+    docs.select(col("doc_id"), explode(expr(shingleArr)).as("shingle")).distinct()
 
   private[graft] def shinglesCteBody(cteName: String, src: String): String =
     s"""$cteName AS (
@@ -123,9 +128,6 @@ object Dedup {
        |          for i in range(len(str_split(text, ' ')) - 2)]
        |    ELSE [text] END) AS shingle
        |  FROM $src)""".stripMargin
-
-  private def shingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(corpus(s, d))
 
   private val shinglesCte: String =
     s"""$corpusCte,
@@ -146,17 +148,36 @@ object Dedup {
   private[graft] val MhA = Seq(1103515245L, 1299709L, 15485863L, 32452843L)
   private[graft] val MhB = Seq(12345L, 67890L, 424243L, 9999991L)
 
+  /** The per-doc signature frame (doc_id, hs, mh0..mh3) of any
+    * (doc_id, text) frame: `hs` = the 60-bit md5 prefixes of the doc's
+    * DISTINCT shingles (the exact-Jaccard verify set), mh_k = min over
+    * those shingles of (A_k·h + B_k) mod P, h = the 28-bit md5 prefix.
+    * ONE definition behind [[minhashOf]], [[minhashBandKeysOf]],
+    * [[shSetsOf]], near-dup pairs and the incremental index.
+    *
+    * A pure per-row projection — no explode, distinct or aggregate, so no
+    * exchange: `array_distinct` over [[shingleArr]] is the per-doc set,
+    * each distinct shingle is md5'd once into its 60-bit prefix in its
+    * own projection, and `array_min` replaces the grouped `min`. h is
+    * the top 28 bits of that prefix (the first 7 hex digits), so all four
+    * mins read `hs` — which keeps CollapseProject from copying the string
+    * hashing into each of them. A NULL text yields one NULL shingle whose
+    * NULL hash is dropped: hs = [] and NULL mins, as the oracle's grouped
+    * min over that doc's NULL-hash row gives. CONTRACT: `doc_id` is
+    * unique per row — rows sharing a doc_id are not merged into one
+    * signature. */
+  private[graft] def sigSetsOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), expr(s"filter(transform(array_distinct($shingleArr), " +
+        "sh -> CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)), h -> h IS NOT NULL)").as("hs"))
+      .select(col("doc_id") +: col("hs") +: (0 until 4).map(k => expr(
+        s"array_min(transform(hs, x -> (shiftright(x, 32) * ${MhA(k)}L + ${MhB(k)}L) % ${MhP}L))")
+        .as(s"mh$k")): _*)
+
   /** MinHash signatures of any (doc_id, text) frame — the library entry
     * point ([[graft.api.GraftApi.minhashSignatures]]). */
   private[graft] def minhashOf(docs: DataFrame): DataFrame =
-    shinglesOf(docs)
-      .select(col("doc_id"),
-        expr("CAST(conv(substr(md5(shingle), 1, 7), 16, 10) AS BIGINT)").as("h"))
-      .groupBy("doc_id")
-      .agg(
-        min((col("h") * MhA.head + MhB.head) % MhP).as("mh0"),
-        (1 until 4).map(k =>
-          min((col("h") * MhA(k) + MhB(k)) % MhP).as(s"mh$k")): _*)
+    sigSetsOf(docs).select("doc_id", "mh0", "mh1", "mh2", "mh3")
 
   private def minhash(s: SparkSession, d: String): DataFrame =
     minhashOf(corpus(s, d))
@@ -171,39 +192,15 @@ object Dedup {
        |         ${(0 until 4).map(k => s"min((h * ${MhA(k)} + ${MhB(k)}) % $MhP) AS mh$k").mkString(",\n         ")}
        |  FROM hs GROUP BY doc_id)""".stripMargin
 
-  /** Per-row MinHash band keys — a pure map-side projection (`array_min`
-    * over the universal-hash shingle transforms; duplicate shingles
-    * cannot change a min, so the array form equals [[minhashOf]]'s
-    * aggregate exactly). Two rows per doc: (doc_id, "bi:bandKey").
-    * Because no aggregation is involved, the same expression drives
+  /** Per-row MinHash band keys: two rows per doc, (doc_id, "bi:bandKey").
+    * [[sigSetsOf]] is a pure projection, so the same expression drives
     * batch band joins and STATELESS streaming band assignment
     * (graft.streaming.Streams.st12); the library entry point is
     * [[graft.api.GraftApi.minhashBandKeys]]. */
-  private[graft] def minhashBandKeysOf(docs: DataFrame): DataFrame = {
-    // zip-of-shifted-slices, not transform(sequence, i -> slice(split…)):
-    // a lambda mentioning split(text) re-splits per element (see
-    // [[shinglesOf]] — same fix, measured there)
-    val shArr = "CASE WHEN size(split(text, ' ')) >= 3 " +
-      "THEN transform(arrays_zip(" +
-      "slice(split(text, ' '), 1, size(split(text, ' ')) - 2), " +
-      "slice(split(text, ' '), 2, size(split(text, ' ')) - 2), " +
-      "slice(split(text, ' '), 3, size(split(text, ' ')) - 2)), " +
-      "s -> concat(s['0'], ' ', s['1'], ' ', s['2'])) " +
-      "ELSE array(text) END"
-    // Hoist the md5 pass into its own projection: the generator expression
-    // below is NOT subexpression-eliminated by codegen, so inlining hArr
-    // would re-split + re-md5 every shingle once per permutation (4×the
-    // string hashing — the hot loop). After this projection only LONG
-    // arithmetic rides the per-permutation transforms.
-    val hArr = s"transform($shArr, sh -> CAST(conv(substr(md5(sh), 1, 7), 16, 10) AS BIGINT))"
-    def mh(k: Int): String =
-      s"array_min(transform(h, x -> (x * ${MhA(k)}L + ${MhB(k)}L) % ${MhP}L))"
-    docs.select(col("doc_id"), expr(hArr).as("h"))
-      .select(col("doc_id"),
-        explode(array(
-          concat_ws(":", lit(0), expr(s"${mh(0)} * ${MhP}L + ${mh(1)}")),
-          concat_ws(":", lit(1), expr(s"${mh(2)} * ${MhP}L + ${mh(3)}")))).as("bucket"))
-  }
+  private[graft] def minhashBandKeysOf(docs: DataFrame): DataFrame =
+    sigSetsOf(docs).select(col("doc_id"), explode(array(
+      concat_ws(":", lit(0), col("mh0") * MhP + col("mh1")),
+      concat_ws(":", lit(1), col("mh2") * MhP + col("mh3")))).as("bucket"))
 
   /** The band-join candidate pairs (pre-verify, distinct) as SQL — the
     * batch equivalence oracle for the STREAMING detector
@@ -242,14 +239,10 @@ object Dedup {
   private[graft] val D3MaxBand = 50
 
   private[graft] def nearDupPairsOf(docs: DataFrame, minJacBp: Int = 8000): DataFrame = {
-    // Round-16 single-pass shape (guide §2.4 "remove shuffles outright"):
-    // the old plan evaluated the shingle→md5→aggregate machinery ~5× per
-    // run — the minhash agg twice under the band self-union (each branch
-    // prunes different mh columns, so exchange reuse never merged them),
-    // twice more under the hot-band groupBy + join-back diamond, and a
-    // fifth shingle pass for the verify sets. Now:
-    //   - ONE fused aggregation ([[sigSetsOf]]) yields minhash mins AND
-    //     the verify sets from one md5 pass;
+    // Shape: the signature frame ([[sigSetsOf]]) is a per-row projection
+    // (array_distinct of the row's shingle array, one md5 per distinct
+    // shingle, array_min per permutation), so the ONLY exchanges are the
+    // band exchange and the candidate-pair aggregate:
     //   - band rows come from a 2-element explode, hs riding along;
     //   - the hot-band cap is a COUNT WINDOW over the band exchange the
     //     self-join needs anyway (same ≤ D3MaxBand groups; one shuffle
@@ -259,9 +252,9 @@ object Dedup {
     // band key = mh_i·P + mh_j packs the 2-signature band into ONE long
     // (mh < P ⇒ no collisions across distinct pairs, max < P² ≈ 2^58).
     // Verify stays exact-integer over the 60-bit md5-prefix SETS
-    // (PRECONDITION: `hs` is a set per doc — shinglesOf is `.distinct()`);
-    // candidate pairs colliding in both bands carry identical arrays, so
-    // first(hs) per (id_a, id_b) equals the old distinct + set re-join.
+    // (PRECONDITION: `hs` is a set per doc — sigSetsOf's array_distinct,
+    // with doc_id unique per row); every band row of a doc carries the
+    // identical array, so first(hs) per (id_a, id_b) is well-defined.
     val bands = bandsOfSigs(sigSetsOf(docs), keep = Seq("hs"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bi")
     val bounded = bands.withColumn("bn", count(lit(1)).over(w))
@@ -1365,33 +1358,9 @@ object Dedup {
     * Split-then-hash ≡ hash-then-split (a doc's signature depends only
     * on its own shingles), which is what makes the exact oracle on the
     * unified corpus possible. */
-  /** Fused per-doc signature frame (doc_id, hs, mh0..mh3): ONE md5 pass
-    * over the distinct shingles yields both the 60-bit shingle-set
-    * hashes (`hs`, [[shSetsOf]]'s content) and the four MinHash mins
-    * ([[minhashOf]]'s values) in a SINGLE aggregation — the 28-bit h and
-    * the 60-bit h60 are different prefixes of the same md5 hex string,
-    * so the old two-pass shape (minhash agg + set agg, each re-exploding
-    * and re-hashing every shingle) was pure diamond reuse (round-16,
-    * guide §2.3/§2.4). Values are bit-identical to the unfused helpers:
-    * min over (h·A+B) mod P of the same distinct-shingle h's, and
-    * collect_list order is irrelevant (hs is consumed only by
-    * order-insensitive array_intersect/size). */
-  private[graft] def sigSetsOf(docs: DataFrame): DataFrame =
-    shinglesOf(docs)
-      .select(col("doc_id"), md5(col("shingle")).as("m"))
-      .select(col("doc_id"),
-        conv(substring(col("m"), 1, 15), 16, 10).cast("long").as("h60"),
-        conv(substring(col("m"), 1, 7), 16, 10).cast("long").as("h"))
-      .groupBy("doc_id")
-      .agg(
-        collect_list(col("h60")).as("hs"),
-        (0 until 4).map(k =>
-          min((col("h") * MhA(k) + MhB(k)) % MhP).as(s"mh$k")): _*)
-
   /** Band rows of a [[sigSetsOf]] frame via a 2-element EXPLODE (not a
-    * self-union, which would plan the upstream aggregation twice — the
-    * two union branches prune different mh columns, so exchange reuse
-    * cannot merge them). `keep` columns ride along with each band row. */
+    * self-union, which would scan and hash the text once per branch).
+    * `keep` columns ride along with each band row. */
   private def bandsOfSigs(sigs: DataFrame, keep: Seq[String] = Nil): DataFrame =
     sigs.select(col("doc_id") +: keep.map(col) :+
         explode(array(
@@ -1492,13 +1461,14 @@ object Dedup {
   // PRECONDITION for the incremental verify: `hs` must be a SET per doc —
   // `array_intersect` has distinct semantics while the d13 oracle counts
   // shingle-hash join matches with multiplicity, and the two agree only
-  // because (a) shinglesOf is `.distinct()` per doc and (b) within-doc
-  // 60-bit h60 collisions are effectively impossible (≤ a few hundred
-  // shingles/doc vs a 2^60 space). If shinglesOf ever loses its distinct,
-  // add `array_distinct` here AND make the oracle dedupe — changing one
-  // side alone breaks the hash match.
-  private[graft] def shSetsOf(df: DataFrame): DataFrame = shinglesOf(df)
-    .groupBy("doc_id").agg(collect_list(h60(col("shingle"))).as("hs"))
+  // because (a) [[sigSetsOf]] takes `array_distinct` of each row's
+  // shingle array before hashing (the oracle's `SELECT DISTINCT`
+  // shingles) and (b) within-doc 60-bit collisions are effectively
+  // impossible (≤ a few hundred shingles/doc vs a 2^60 space). Without
+  // the array_distinct, size(hs) would count repeated shingles that
+  // array_intersect collapses, and the Jaccard would drift from the
+  // oracle's.
+  private[graft] def shSetsOf(df: DataFrame): DataFrame = sigSetsOf(df).select("doc_id", "hs")
 
   /** Fixture binding: "old" = doc_id % 3 ≠ 0, "new" = doc_id % 3 = 0 —
     * the planted dup shells sit at id + 1,000,000/2,000,000 (both ≡ 1 and
@@ -1839,7 +1809,7 @@ object Dedup {
     * see the de-saturation note above); <w-word docs fall back to the
     * whole text, like shinglesOf. */
   private def wideShinglesOf(docs: DataFrame, w: Int): DataFrame = {
-    // zip-of-shifted-slices (constant splits per row) — see [[shinglesOf]]
+    // zip-of-shifted-slices (constant splits per row) — see [[shingleArr]]
     val n = s"size(split(text, ' ')) - ${w - 1}"
     val zips = (1 to w).map(k => s"slice(split(text, ' '), $k, $n)").mkString(", ")
     val fields = (0 until w).map(i => s"s['$i']").mkString(", ")

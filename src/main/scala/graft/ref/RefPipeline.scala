@@ -93,11 +93,16 @@ object RefPipeline {
     // summary-free copy for the same reason as MlPipelines.fitScore: the
     // LinearSVC training summary holds a SparkSession, which stops
     // serializing once anything in the JVM has used Dataset.observe
+    train.cache()
     val model: org.apache.spark.ml.Model[_] =
-      if (svm) new LinearSVC().setMaxIter(10).setRegParam(0.1).fit(train.cache())
+      if (svm) new LinearSVC().setMaxIter(10).setRegParam(0.1).fit(train)
         .copy(org.apache.spark.ml.param.ParamMap.empty)
-      else new NaiveBayes().fit(train.cache())
+      else new NaiveBayes().fit(train)
         .copy(org.apache.spark.ml.param.ParamMap.empty)
+    // the metrics frame reads only `test` and the fitted model. Blocking,
+    // so the block removal finishes here instead of overlapping the
+    // metrics job and the caller's next query
+    train.unpersist(blocking = true)
     metricsOf(model.transform(test).select("prediction", "label"))
   }
 

@@ -44,9 +44,10 @@ class CcSpec extends SparkSpec {
   }
 
   test("d8 label propagation on an empty pair list returns an empty cluster frame") {
-    // round-17: the emptiness probe is fused into round 1's convergence
-    // aggregate (NULL sum ⟺ no edges) — pin that the empty input still
-    // converges immediately and yields the empty frame with the full schema
+    // dedupClustersOf keeps its count == 0 pre-probe on the checkpointed
+    // edges (fusing it into round 1 measured slower); this pins that fast
+    // path: the empty input returns at once, as the empty frame with the
+    // full schema
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     val out = Dedup.dedupClustersOf(empty)
     assert(out.columns.toSeq === Seq("doc_id", "cluster_id", "n_members"))

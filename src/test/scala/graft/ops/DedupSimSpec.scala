@@ -359,6 +359,7 @@ class DedupSimSpec extends SparkSpec {
   }
 
   test("fused sigSetsOf equals the unfused minhashOf + shSetsOf pair (round-16 probe fusion)") {
+    import org.apache.spark.sql.functions._
     import spark.implicits._
     // mixed corpus: multi-shingle docs, a <3-word fallback doc, exact dups
     val docs = Seq(
@@ -375,10 +376,26 @@ class DedupSimSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val sets = Dedup.shSetsOf(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).sorted).toMap
+    // minhashOf and shSetsOf are now projections of sigSetsOf, so the
+    // independent side is the grouped form over the exploded, distinct
+    // shinglesOf rows: collect_list of the 60-bit prefix and min of each
+    // affine map of the 28-bit prefix
+    val grouped = Dedup.shinglesOf(docs)
+      .select(col("doc_id"), md5(col("shingle")).as("m"))
+      .select(col("doc_id"),
+        conv(substring(col("m"), 1, 15), 16, 10).cast("long").as("h60"),
+        conv(substring(col("m"), 1, 7), 16, 10).cast("long").as("h"))
+      .groupBy("doc_id")
+      .agg(collect_list(col("h60")).as("hs"), (0 until 4).map(k =>
+        min((col("h") * Dedup.MhA(k) + Dedup.MhB(k)) % Dedup.MhP).as(s"mh$k")): _*)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Long](1).sorted,
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(fused.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L))
     fused.foreach { case (id, hs, mins) =>
       assert(mins === mh(id), s"minhash mismatch for doc $id")
       assert(hs === sets(id), s"shingle-set mismatch for doc $id")
+      assert((hs, mins) === grouped(id), s"per-row signature != grouped form for doc $id")
     }
   }
 
@@ -386,12 +403,13 @@ class DedupSimSpec extends SparkSpec {
     import spark.implicits._
     // Round-17 (advice item): d3/d6/d20 and the incremental probe take
     // first(hs)/first(n) per candidate pair, which is sound ONLY while
-    // hs is constant per doc AND duplicate-free — both rest on shinglesOf
-    // keeping .distinct(). The round-16 fused-vs-unfused test compares
-    // sigSetsOf against shSetsOf, but a dropped distinct would change
-    // BOTH sides identically and sail through; this test recomputes the
-    // expected distinct-shingle hash set in plain Scala so the invariant
-    // fails loudly instead of drifting Jaccard silently.
+    // hs is constant per doc AND duplicate-free — both rest on sigSetsOf
+    // taking array_distinct of each row's shingle array. The
+    // fused-vs-unfused test compares sigSetsOf against shSetsOf, but a
+    // dropped array_distinct would change BOTH sides identically and sail
+    // through; this test recomputes the expected distinct-shingle hash
+    // set in plain Scala so the invariant fails loudly instead of
+    // drifting Jaccard silently.
     val docs = Seq(
       (1L, "a b c a b c a b c"), // repeated shingles: 3 distinct of 7 total
       (2L, "x y z x y z"),       // 3 distinct of 4 total
@@ -414,10 +432,113 @@ class DedupSimSpec extends SparkSpec {
       .foreach { case (id, text) =>
         val hs = got(id)
         assert(hs.distinct.size === hs.size,
-          s"doc $id: hs carries duplicates — shinglesOf lost .distinct(), first(hs) Jaccard is now wrong")
+          s"doc $id: hs carries duplicates — sigSetsOf lost its array_distinct, first(hs) Jaccard is now wrong")
         assert(hs.sorted === expected(text),
           s"doc $id: hs != pure-Scala distinct-shingle md5 set")
       }
+  }
+
+  // ---- plain-Scala model of the MinHash signature and the near-dup verify ----
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  /** One text's signature as plain Scala: distinct word 3-grams (a <3-word
+    * text is its own shingle, NULL has none) → md5 → the 60-bit prefixes
+    * (sorted) and, if there is any shingle, the min of each affine map of
+    * the 28-bit prefix. */
+  private def modelSig(text: String): (Seq[Long], Option[Seq[Long]]) = {
+    val shingles = if (text == null) Nil else {
+      val w = text.split(" ", -1)
+      if (w.length >= 3) w.sliding(3).map(_.mkString(" ")).toSeq.distinct else Seq(text)
+    }
+    val hex = shingles.map(md5Hex)
+    val h = hex.map(x => java.lang.Long.parseLong(x.take(7), 16))
+    val mins = if (h.isEmpty) None else Some((0 until 4).map(k =>
+      h.map(x => (x * Dedup.MhA(k) + Dedup.MhB(k)) % Dedup.MhP).min))
+    (hex.map(x => java.lang.Long.parseLong(x.take(15), 16)).sorted, mins)
+  }
+
+  private def sample[T](g: org.scalacheck.Gen[T], seed: Long): T =
+    g.pureApply(org.scalacheck.Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+
+  test("sigSetsOf and minhashOf equal the plain-Scala signature model on generated docs") {
+    import org.scalacheck.Gen
+    import spark.implicits._
+    // a small vocabulary (shared and repeated shingles) with non-ASCII and
+    // astral-plane words and the empty token (double spaces)
+    val word = Gen.oneOf("the", "data", "row", "alpha", "beta", "café", "naïve",
+      "日本語", "Ωmega", "😀", "x", "")
+    def words(n: Int): Gen[String] = Gen.listOfN(n, word).map(_.mkString(" "))
+    val doc: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      1 -> Gen.const(""),
+      3 -> Gen.choose(1, 2).flatMap(words),
+      3 -> (for { n <- Gen.choose(3, 5); reps <- Gen.choose(5, 60); w <- words(n) }
+        yield Seq.fill(reps)(w).mkString(" ")), // heavily repeated shingles
+      5 -> Gen.choose(3, 60).flatMap(words),
+      1 -> words(500))
+    // every edge case is present whatever the seed draws
+    val texts = Seq(null, "", " ", "solo", "two words", "a b c a b c a b c",
+      (1 to 500).map(i => s"w${i % 37}").mkString(" ")) ++
+      sample(Gen.listOfN(300, doc), 20261017L)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def mins(r: org.apache.spark.sql.Row, from: Int): Option[Seq[Long]] =
+      if (r.isNullAt(from)) None else Some((from until from + 4).map(r.getLong))
+    val sigs = Dedup.sigSetsOf(docs).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Long](1).sorted, mins(r, 2))).toMap
+    val mh = Dedup.minhashOf(docs).collect().map(r => r.getLong(0) -> mins(r, 1)).toMap
+    assert(sigs.size === texts.size && mh.size === texts.size, "one signature row per doc")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val want = modelSig(t)
+      val label = s"doc $i [${Option(t).map(_.take(40)).orNull}]"
+      assert(sigs(i.toLong) === want, s"sigSetsOf != model for $label")
+      assert(mh(i.toLong) === want._2, s"minhashOf != model for $label")
+    }
+  }
+
+  test("nearDupPairs equals the plain-Scala LSH model on planted near-dup families") {
+    import org.scalacheck.Gen
+    import spark.implicits._
+    val word = Gen.choose(0, 4999).map(i => s"w$i")
+    val base = sample(Gen.listOfN(160, Gen.choose(4, 60).flatMap(n => Gen.listOfN(n, word))), 7L)
+    // families: copies, first-word drops, one-word edits and appends of a
+    // base doc; one exact-copy family wider than D3MaxBand (its bands are
+    // capped away) and one just under it; and a pair that repeats one
+    // 4-word cycle 8 and 9 times (same shingle SET, different counts)
+    val edits = sample(Gen.listOfN(base.size, Gen.listOfN(4, Gen.choose(0, 1 << 20))), 8L)
+    val variants = base.zip(edits).zipWithIndex.flatMap { case ((ws, e), i) =>
+      val pos = e.head % ws.size
+      if (i % 3 != 0) Nil else Seq(ws, ws.tail, ws.updated(pos, s"v${e(1)}"),
+        ws :+ s"v${e(2)}", ws.take(ws.size - 1)).take(1 + e(3) % 5)
+    }
+    val texts = (base ++ variants).map(_.mkString(" ")) ++
+      Seq.fill(Dedup.D3MaxBand + 10)(base(1).mkString(" ")) ++
+      Seq.fill(Dedup.D3MaxBand - 5)(base(2).mkString(" ")) ++
+      Seq(8, 9).map(r => Seq.fill(r)(base(3).take(4)).flatten.mkString(" ")) ++
+      Seq(null, "", "solo", "two words")
+    val ids = texts.indices.map(_.toLong * 3 + 11)
+    val docs = ids.zip(texts).toDF("doc_id", "text")
+    val got = graft.api.GraftApi.nearDupPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+
+    val sig = ids.zip(texts.map(modelSig)).toMap
+    val P = Dedup.MhP
+    val buckets = sig.toSeq.flatMap { case (id, (_, m)) =>
+      m.toSeq.flatMap(m => Seq((m(0) * P + m(1), 0) -> id, (m(2) * P + m(3), 1) -> id))
+    }.groupBy(_._1).values.map(_.map(_._2))
+    val (kept, capped) = buckets.partition(_.size <= Dedup.D3MaxBand)
+    assert(capped.nonEmpty, "the wide family must overflow the band cap")
+    val cand = kept.flatMap(b => for (a <- b; c <- b if a < c) yield (a, c)).toSet
+    val want = cand.flatMap { case (a, b) =>
+      val (ha, hb) = (sig(a)._1.toSet, sig(b)._1.toSet)
+      val inter = (ha & hb).size.toLong
+      val uni = ha.size + hb.size - inter
+      if (inter * 10000 >= uni * 8000) Some((a, b, inter, uni, inter * 10000 / uni)) else None
+    }
+    assert(want.exists(_._5 < 10000L), "the model must include inexact near-dups")
+    assert(got === want)
   }
 
   test("D17 prefix filtering is exact: finds boundary-tau pairs, excludes below-tau, no cap loss on hot shingles") {

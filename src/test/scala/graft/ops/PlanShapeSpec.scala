@@ -397,6 +397,44 @@ class PlanShapeSpec extends SparkSpec {
     Pinned.releaseAll(spark)
   }
 
+  test("nearDupPairs signatures are a per-row projection: no shingle-keyed exchange " +
+      "or aggregate, no doc_id aggregate below the band exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = graft.api.GraftApi.nearDupPairs(Dedup.corpus(spark, sfDir))
+    assert(df.collect().nonEmpty, "the planted copies must yield pairs")
+    // every node of the executed (AQE-final) plan, through query stages
+    // and reused exchanges
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    def keys(p: SparkPlan): Seq[String] = (p match {
+      case a: BaseAggregateExec => a.groupingExpressions
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions
+        case _ => Nil
+      }
+      case _ => Nil
+    }).flatMap(_.references.map(_.name))
+    val all = nodes(df.queryExecution.executedPlan)
+    val shingleKeyed = all.filter(keys(_).contains("shingle"))
+    assert(shingleKeyed.isEmpty, "no exchange or aggregate may key on shingle\n" +
+      shingleKeyed.map(_.simpleString(200)).mkString("\n"))
+    val bandExchanges = all.collect { case e: ShuffleExchangeExec if keys(e).contains("band") => e }
+    assert(bandExchanges.nonEmpty, "the band self-join must shuffle on the band key")
+    val docAggs = bandExchanges.flatMap(e => e.children.flatMap(nodes)).collect {
+      case a: BaseAggregateExec if keys(a).contains("doc_id") => a
+    }
+    assert(docAggs.isEmpty, "signatures must not aggregate per doc below the band exchange\n" +
+      docAggs.map(_.simpleString(200)).mkString("\n"))
+  }
+
   test("pipe3 transform: no cartesian; drop-list anti-join and pack window " +
       "are shard-keyed (never a global single-partition sort)") {
     val sp = spark
