@@ -28,7 +28,8 @@ import graft.text.TextOps
 object GraftApi {
 
   /** Register the graft SQL functions (`graft_clean_nb`, `graft_clean_svm`,
-    * `graft_hamming`, `graft_dot`, `graft_bloom_agg`, `graft_might_contain`)
+    * `graft_hamming`, `graft_dot`, `graft_shingle_h60`,
+    * `graft_minhash_affine`, `graft_bloom_agg`, `graft_might_contain`, …)
     * on a session. Idempotent. */
   def registerFunctions(spark: SparkSession): Unit = GraftFunctions.register(spark)
 
@@ -71,7 +72,8 @@ object GraftApi {
     Dedup.nearDupPairsOf(docs, minJaccardBp)
 
   /** MinHash LSH band keys of `docs` (doc_id, text) as a PER-ROW
-    * projection — `array_min` over universal-hash shingle transforms, no
+    * projection — the native `graft_shingle_h60` / `graft_minhash_affine`
+    * kernel (one byte scan and one md5 per distinct shingle per doc), no
     * aggregation, no shuffle — so the same expression drives batch band
     * joins and STATELESS streaming band assignment (see
     * `Streams.st12`). Returns (doc_id, bucket) with two rows per doc
@@ -521,7 +523,12 @@ object GraftApi {
     * aggregates over one token explode; the query set broadcasts against
     * the postings, so the corpus is never scanned per query. Scores are
     * ranked as exact integer micro-units (doc_id breaks ties). Returns
-    * (query_id, rnk, doc_id, score_e6). */
+    * (query_id, rnk, doc_id, score_e6).
+    *
+    * Storage: each call persists its postings and doc-length frames
+    * (MEMORY_AND_DISK), so the corpus is tokenized once per call, and
+    * does NOT free them — call [[releasePinned]] once the result is
+    * consumed. */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
     Retrieval.bm25TopKOf(docs, queries, k)
 
@@ -530,7 +537,11 @@ object GraftApi {
     * term as a whole token): per query — corpus-wide relevant count,
     * relevant-in-top-k, first relevant rank, MRR, precision@k, and
     * nDCG@k with literal-integer 1/log₂(i+1) discounts (no float log in
-    * either engine). Registry twin: `ret5_ranking_quality`. */
+    * either engine). Registry twin: `ret5_ranking_quality`.
+    *
+    * Storage: like [[bm25TopK]], each call persists its postings and
+    * doc-length frames and does not free them — call [[releasePinned]]
+    * once the result is consumed. */
   def rankingMetrics(docs: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
     Retrieval.rankingMetricsOf(docs, queries, k)
 
@@ -760,7 +771,11 @@ object GraftApi {
 
   /** Weighted-term BM25 top-k: queries carry (query_id, term, wt_bp);
     * each term's contribution scales by wt_bp/10⁴ — the primitive under
-    * PMI query expansion (ret3). */
+    * PMI query expansion (ret3).
+    *
+    * Storage: like [[bm25TopK]], each call persists its postings and
+    * doc-length frames and does not free them — call [[releasePinned]]
+    * once the result is consumed. */
   def bm25WeightedTopK(docs: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
     Retrieval.bm25WeightedTopKOf(docs, queries, k)
 
@@ -860,7 +875,11 @@ object GraftApi {
     * the probabilistic alternative to [[bm25TopK]]; same
     * (query_id, term) query frame, same (query_id, rnk, doc_id,
     * score_e6) output, per-term ln rounded to e6 BEFORE the integer
-    * per-doc sum (rank order engine-exact by construction). */
+    * per-doc sum (rank order engine-exact by construction).
+    *
+    * Storage: like [[bm25TopK]], each call persists its postings and
+    * doc-length frames and does not free them — call [[releasePinned]]
+    * once the result is consumed. */
   def queryLikelihoodTopK(docs: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
     Retrieval.queryLikelihoodTopKOf(docs, queries, k)
 

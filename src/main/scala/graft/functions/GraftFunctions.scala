@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.types.LongType
 
 import graft.text.TextOps
 
@@ -36,6 +37,10 @@ object GraftFunctions {
     "graft_nfc" -> { args => NfcNormalize(args.head) },
     "graft_dot" -> { args => DotProductLong(args(0), args(1)) },
     "graft_mingram8" -> { args => MinGram8Hash(args.head) },
+    "graft_shingle_h60" -> { args => ShingleH60(args.head) },
+    "graft_minhash_affine" -> { args =>
+      MinHashAffine(args(0), Cast(args(1), LongType), Cast(args(2), LongType), Cast(args(3), LongType))
+    },
     "graft_hilbert" -> { args => HilbertIndex(args(0), args(1)) },
     "graft_viterbi" -> { args => ViterbiCost(args.head) },
     "graft_wordpiece" -> { args => WordPieceEncode(args.head) },

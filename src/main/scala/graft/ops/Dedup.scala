@@ -93,8 +93,11 @@ object Dedup {
 
   /** A row's word 3-gram shingles as ONE array expression over `text`
     * (in text order, repeats kept; a <3-word text is its own single
-    * shingle) — the single shingle definition behind both [[shinglesOf]]
-    * and [[sigSetsOf]], so the <3-word fallback can't drift between them.
+    * shingle) — the shingle definition behind [[shinglesOf]]. The
+    * signature path ([[sigSetsOf]]) computes the same shingles natively
+    * in [[graft.functions.ShingleH60]]; DedupSimSpec pins that the two
+    * definitions give the same per-doc shingle-hash set on generated
+    * edge-case docs, so the <3-word fallback can't drift between them.
     *
     * Construction is arrays_zip over three SHIFTED SLICES of the split
     * array, not `transform(sequence, i -> slice(split(text), …))`: a
@@ -155,24 +158,25 @@ object Dedup {
     * ONE definition behind [[minhashOf]], [[minhashBandKeysOf]],
     * [[shSetsOf]], near-dup pairs and the incremental index.
     *
-    * A pure per-row projection — no explode, distinct or aggregate, so no
-    * exchange: `array_distinct` over [[shingleArr]] is the per-doc set,
-    * each distinct shingle is md5'd once into its 60-bit prefix in its
-    * own projection, and `array_min` replaces the grouped `min`. h is
-    * the top 28 bits of that prefix (the first 7 hex digits), so all four
-    * mins read `hs` — which keeps CollapseProject from copying the string
-    * hashing into each of them. A NULL text yields one NULL shingle whose
-    * NULL hash is dropped: hs = [] and NULL mins, as the oracle's grouped
-    * min over that doc's NULL-hash row gives. CONTRACT: `doc_id` is
-    * unique per row — rows sharing a doc_id are not merged into one
-    * signature. */
-  private[graft] def sigSetsOf(docs: DataFrame): DataFrame =
+    * A pure per-row projection of two native, codegen'd expressions — no
+    * explode, distinct, aggregate or higher-order function:
+    * `graft_shingle_h60` ([[graft.functions.ShingleH60]]) scans the text's
+    * bytes once and md5s each distinct shingle once into `hs`, and each
+    * mh_k is a `graft_minhash_affine` ([[graft.functions.MinHashAffine]])
+    * over `hs` (h is the top 28 bits of the 60-bit prefix). All four mins
+    * read `hs` from the projection below, so CollapseProject keeps the
+    * hashing in one place instead of copying it into each of them
+    * (PlanShapeSpec pins this). A NULL text has no shingles: hs = [] and
+    * NULL mins, as the oracle's grouped min over that doc's NULL-hash row
+    * gives. CONTRACT: `doc_id` is unique per row — rows sharing a doc_id
+    * are not merged into one signature. */
+  private[graft] def sigSetsOf(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
-      .select(col("doc_id"), expr(s"filter(transform(array_distinct($shingleArr), " +
-        "sh -> CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)), h -> h IS NOT NULL)").as("hs"))
+      .select(col("doc_id"), expr("graft_shingle_h60(text)").as("hs"))
       .select(col("doc_id") +: col("hs") +: (0 until 4).map(k => expr(
-        s"array_min(transform(hs, x -> (shiftright(x, 32) * ${MhA(k)}L + ${MhB(k)}L) % ${MhP}L))")
-        .as(s"mh$k")): _*)
+        s"graft_minhash_affine(hs, ${MhA(k)}L, ${MhB(k)}L, ${MhP}L)").as(s"mh$k")): _*)
+  }
 
   /** MinHash signatures of any (doc_id, text) frame — the library entry
     * point ([[graft.api.GraftApi.minhashSignatures]]). */
@@ -240,9 +244,9 @@ object Dedup {
 
   private[graft] def nearDupPairsOf(docs: DataFrame, minJacBp: Int = 8000): DataFrame = {
     // Shape: the signature frame ([[sigSetsOf]]) is a per-row projection
-    // (array_distinct of the row's shingle array, one md5 per distinct
-    // shingle, array_min per permutation), so the ONLY exchanges are the
-    // band exchange and the candidate-pair aggregate:
+    // (the native shingle-hash kernel, one md5 per distinct shingle, one
+    // native min per permutation), so the ONLY exchanges are the band
+    // exchange and the candidate-pair aggregate:
     //   - band rows come from a 2-element explode, hs riding along;
     //   - the hot-band cap is a COUNT WINDOW over the band exchange the
     //     self-join needs anyway (same ≤ D3MaxBand groups; one shuffle
@@ -252,9 +256,10 @@ object Dedup {
     // band key = mh_i·P + mh_j packs the 2-signature band into ONE long
     // (mh < P ⇒ no collisions across distinct pairs, max < P² ≈ 2^58).
     // Verify stays exact-integer over the 60-bit md5-prefix SETS
-    // (PRECONDITION: `hs` is a set per doc — sigSetsOf's array_distinct,
-    // with doc_id unique per row); every band row of a doc carries the
-    // identical array, so first(hs) per (id_a, id_b) is well-defined.
+    // (PRECONDITION: `hs` is a set per doc — the kernel drops repeated
+    // shingles, and doc_id is unique per row); every band row of a doc
+    // carries the identical array, so first(hs) per (id_a, id_b) is
+    // well-defined.
     val bands = bandsOfSigs(sigSetsOf(docs), keep = Seq("hs"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bi")
     val bounded = bands.withColumn("bn", count(lit(1)).over(w))
@@ -1461,11 +1466,11 @@ object Dedup {
   // PRECONDITION for the incremental verify: `hs` must be a SET per doc —
   // `array_intersect` has distinct semantics while the d13 oracle counts
   // shingle-hash join matches with multiplicity, and the two agree only
-  // because (a) [[sigSetsOf]] takes `array_distinct` of each row's
-  // shingle array before hashing (the oracle's `SELECT DISTINCT`
-  // shingles) and (b) within-doc 60-bit collisions are effectively
-  // impossible (≤ a few hundred shingles/doc vs a 2^60 space). Without
-  // the array_distinct, size(hs) would count repeated shingles that
+  // because (a) [[sigSetsOf]]'s shingle kernel drops each row's repeated
+  // shingles before hashing (the oracle's `SELECT DISTINCT` shingles)
+  // and (b) within-doc 60-bit collisions are effectively impossible
+  // (≤ a few hundred shingles/doc vs a 2^60 space). Without that
+  // de-duplication, size(hs) would count repeated shingles that
   // array_intersect collapses, and the Jaccard would drift from the
   // oracle's.
   private[graft] def shSetsOf(df: DataFrame): DataFrame = sigSetsOf(df).select("doc_id", "hs")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The DISTRIBUTED PREFIX-SUM / GLOBAL-RANK idiom, factored once.
   *
@@ -59,12 +60,16 @@ object PrefixSum {
     * (plans/r17/scoped_after{1,2}.json) measured the columnar cache
     * write of those frames COSTING more than the second codegen'd
     * derivation (voc2 1.26×, cur1 1.17× with an unconditional pin),
-    * while the pinned eval family dropped 15-30%. */
+    * while the pinned eval family dropped 15-30%.
+    *
+    * A `frame` the caller has already cached is read from that cache and
+    * left alone: `unpersist` matches plans in the CacheManager, so
+    * pinning and dropping an identical plan would silently drop the
+    * caller's entry too. Only a pin this call made is released. */
   private[graft] def prefixRank(frame: DataFrame, orderCols: Seq[Column],
       sumCol: Option[String] = None, pinInput: Boolean = false): Ranked = {
-    val pinnedInput = if (pinInput)
-      frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else frame
+    val pinHere = pinInput && frame.storageLevel == StorageLevel.NONE
+    if (pinHere) frame.persist(StorageLevel.MEMORY_AND_DISK)
     // LAZY checkpoint (round-17): the offsets collect below is the first
     // action — its groupBy exchange computes every partition of `ranged`
     // map-side and stores the checkpoint blocks in the same job wave, so
@@ -73,7 +78,7 @@ object PrefixSum {
     // guarantee is unchanged: the range exchange (and its boundary
     // sampling) executes once, inside the offsets action; the rank pass
     // reads the stored blocks and can never re-sample.
-    val ranged = pinnedInput.repartitionByRange(orderCols: _*)
+    val ranged = frame.repartitionByRange(orderCols: _*)
       .withColumn("pid", spark_partition_id())
       .localCheckpoint(false)
     val aggCols = Seq(count(lit(1)).as("pn")) ++ sumCol.map(c => sum(col(c)).as("pc"))
@@ -84,7 +89,7 @@ object PrefixSum {
     // the offsets action above materialized the checkpoint; the input pin
     // has served its one purpose (boundary sampling + shuffle read the
     // computed-once input) and is dropped before returning
-    if (pinInput) pinnedInput.unpersist(blocking = false)
+    if (pinHere) frame.unpersist(blocking = false)
     var accN = 0L
     var accC = 0L
     val offs = totals.map { case (pid, pn, pc) =>

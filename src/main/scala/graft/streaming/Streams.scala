@@ -703,8 +703,8 @@ object Streams {
 
   /** ST12: STREAMING near-dup candidate detection — the dedup family's
     * incremental face: as documents arrive, each row's MinHash band keys
-    * are computed MAP-SIDE (the per-row `array_min` over universal-hash
-    * shingle transforms — no aggregation needed, so the stream stays
+    * are computed MAP-SIDE (the per-row native shingle-hash and MinHash
+    * kernel of `Dedup.sigSetsOf` — no aggregation needed, so the stream stays
     * stateless until the bucket grouping), and `flatMapGroupsWithState`
     * keyed by (band, key) holds the doc_ids seen per bucket, emitting a
     * candidate pair the moment a new arrival lands in a non-empty

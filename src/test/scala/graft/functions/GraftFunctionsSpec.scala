@@ -311,6 +311,46 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(got("tab") === 130L * 65536L + 1L)
   }
 
+  test("graft_shingle_h60 and graft_minhash_affine: codegen equals interpreted eval, incl. NULL and []") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    graft.functions.GraftFunctions.register(spark)
+    val texts = Seq(null, "", " ", "  ", "solo", "two words", "a b c", "a b c a b c a b c",
+      " lead ing", "trail ing ", "dou  ble x", "tab\tis not a sep", "nb\u00a0sp is not one",
+      "café 日本語 😀 Ωmega naïve")
+    val arr = texts.map(t => if (t == null) "NULL" else s"'${t.replace("'", "\\'")}'").mkString(", ")
+    val (a, b, p) = (1103515245L, 12345L, 536870909L)
+    // a range-backed frame keeps both expressions inside a whole-stage
+    // codegen'd Project (a local Seq would constant-fold to interpreted eval)
+    val df = spark.range(texts.size)
+      .selectExpr("id", s"element_at(array($arr), cast(id + 1 AS int)) AS t")
+      .selectExpr("id", "graft_shingle_h60(t) AS hs",
+        s"graft_minhash_affine(graft_shingle_h60(t), $a, $b, $p) AS m",
+        s"graft_minhash_affine(IF(id = 0, NULL, array(shiftleft(7L, 32))), 3, 5, 11) AS m_null")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Project") && plan.contains("graft_shingle_h60") &&
+      plan.contains("graft_minhash_affine"), s"expressions fell out of codegen:\n$plan")
+    val got = df.collect().map(r => r.getLong(0).toInt ->
+      (r.getSeq[Long](1), Option(r.get(2)), Option(r.get(3)))).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val hs = ShingleH60(Literal.create(t, StringType)).eval(null).asInstanceOf[ArrayData]
+      val hsLit = Literal(hs, ArrayType(LongType, containsNull = false))
+      val m = MinHashAffine(hsLit, Literal(a), Literal(b), Literal(p)).eval(null)
+      assert(got(i)._1 === hs.toLongArray().toSeq, s"hs codegen != eval for [$t]")
+      assert(got(i)._2 === Option(m), s"min codegen != eval for [$t]")
+    }
+    assert(got(0)._1.isEmpty && got(0)._2.isEmpty, "NULL text: [] and a NULL min")
+    assert(got(0)._3.isEmpty && got(1)._3 === Some((7L * 3 + 5) % 11), "NULL hs gives NULL")
+    // [] -> NULL min on the interpreted path too
+    val empty = Literal(ArrayData.toArrayData(Array.empty[Long]), ArrayType(LongType, false))
+    assert(MinHashAffine(empty, Literal(a), Literal(b), Literal(p)).eval(null) == null)
+    // "a b c" is one shingle: the first 15 hex digits of md5("a b c")
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest("a b c".getBytes("UTF-8"))
+    val hex = md5.map("%02x".format(_)).mkString
+    assert(got(6)._1 === Seq(java.lang.Long.parseLong(hex.take(15), 16)))
+  }
+
   test("ThresholdLevenshtein preserves null semantics") {
     import spark.implicits._
     val before = spark.experimental.extraOptimizations

@@ -403,10 +403,10 @@ class DedupSimSpec extends SparkSpec {
     import spark.implicits._
     // Round-17 (advice item): d3/d6/d20 and the incremental probe take
     // first(hs)/first(n) per candidate pair, which is sound ONLY while
-    // hs is constant per doc AND duplicate-free — both rest on sigSetsOf
-    // taking array_distinct of each row's shingle array. The
+    // hs is constant per doc AND duplicate-free — both rest on sigSetsOf's
+    // shingle kernel dropping each row's repeated shingles. The
     // fused-vs-unfused test compares sigSetsOf against shSetsOf, but a
-    // dropped array_distinct would change BOTH sides identically and sail
+    // dropped de-duplication would change BOTH sides identically and sail
     // through; this test recomputes the expected distinct-shingle hash
     // set in plain Scala so the invariant fails loudly instead of
     // drifting Jaccard silently.
@@ -432,7 +432,7 @@ class DedupSimSpec extends SparkSpec {
       .foreach { case (id, text) =>
         val hs = got(id)
         assert(hs.distinct.size === hs.size,
-          s"doc $id: hs carries duplicates — sigSetsOf lost its array_distinct, first(hs) Jaccard is now wrong")
+          s"doc $id: hs carries duplicates — the shingle kernel lost its de-duplication, first(hs) Jaccard is now wrong")
         assert(hs.sorted === expected(text),
           s"doc $id: hs != pure-Scala distinct-shingle md5 set")
       }
@@ -495,6 +495,69 @@ class DedupSimSpec extends SparkSpec {
       val label = s"doc $i [${Option(t).map(_.take(40)).orNull}]"
       assert(sigs(i.toLong) === want, s"sigSetsOf != model for $label")
       assert(mh(i.toLong) === want._2, s"minhashOf != model for $label")
+    }
+  }
+
+  /** The SQL higher-order-function signature projection that the native
+    * kernel replaced, kept verbatim as a differential model: split/zip
+    * shingles, array_distinct, md5 → hex → conv per shingle, and one
+    * array_min over an affine transform per permutation. */
+  private def sqlSigModel(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    val shingleArr =
+      "CASE WHEN size(split(text, ' ')) >= 3 " +
+        "THEN transform(arrays_zip(" +
+        "slice(split(text, ' '), 1, size(split(text, ' ')) - 2), " +
+        "slice(split(text, ' '), 2, size(split(text, ' ')) - 2), " +
+        "slice(split(text, ' '), 3, size(split(text, ' ')) - 2)), " +
+        "s -> concat(s['0'], ' ', s['1'], ' ', s['2'])) " +
+        "ELSE array(text) END"
+    docs
+      .select(col("doc_id"), expr(s"filter(transform(array_distinct($shingleArr), " +
+        "sh -> CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)), h -> h IS NOT NULL)").as("hs"))
+      .select(col("doc_id") +: col("hs") +: (0 until 4).map(k => expr(
+        s"array_min(transform(hs, x -> (shiftright(x, 32) * ${Dedup.MhA(k)}L + " +
+          s"${Dedup.MhB(k)}L) % ${Dedup.MhP}L))").as(s"mh$k")): _*)
+  }
+
+  test("sigSetsOf's native kernel equals the SQL higher-order-function form and shinglesOf, " +
+      "on generated edge-case docs") {
+    import org.scalacheck.Gen
+    import org.apache.spark.sql.functions.{col, conv, md5, substring}
+    import spark.implicits._
+    // separators are single ' ' only: tab and NBSP stay inside tokens
+    val word = Gen.oneOf("the", "data", "row", "alpha", "café", "naïve", "日本語",
+      "Ωmega", "😀", "x", "", "tab\there", "nb\u00a0sp")
+    def words(n: Int): Gen[String] = Gen.listOfN(n, word).map(_.mkString(" "))
+    val doc: Gen[String] = Gen.frequency(
+      1 -> Gen.oneOf(null: String, "", " ", "  ", "   "),
+      3 -> Gen.choose(1, 2).flatMap(words),
+      2 -> Gen.choose(3, 12).flatMap(words).map(" " + _),  // leading space
+      2 -> Gen.choose(3, 12).flatMap(words).map(_ + " "),  // trailing space
+      3 -> (for { n <- Gen.choose(3, 5); reps <- Gen.choose(5, 60); w <- words(n) }
+        yield Seq.fill(reps)(w).mkString(" ")), // heavily repeated shingles
+      5 -> Gen.choose(3, 60).flatMap(words),
+      1 -> words(500))
+    val texts = Seq(null, "", " ", "  ", "solo", "two words", " a b c", "a b c ", "a  b c",
+      "a\tb c d", "a\u00a0b c d", "😀 𝔘 日本語 x") ++
+      sample(Gen.listOfN(300, doc), 20261018L)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) ->
+      (r.getSeq[Long](1), (2 to 5).map(j => if (r.isNullAt(j)) None else Some(r.getLong(j))))).toMap
+    val got = rows(Dedup.sigSetsOf(docs))
+    val want = rows(sqlSigModel(docs))
+    // the exploded shingle path (shingleArr) must give the same per-doc set
+    val viaShingles = Dedup.shinglesOf(docs)
+      .select(col("doc_id"), conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"))
+      .collect().filterNot(_.isNullAt(1)).groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(_.getLong(1)).toSet }
+    assert(got.size === texts.size && want.size === texts.size, "one signature row per doc")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val label = s"doc $i [${Option(t).map(_.take(40)).orNull}]"
+      assert(got(i.toLong)._1 === want(i.toLong)._1, s"hs (in order) != SQL form for $label")
+      assert(got(i.toLong)._2 === want(i.toLong)._2, s"mh0..mh3 != SQL form for $label")
+      assert(got(i.toLong)._1.toSet === viaShingles.getOrElse(i.toLong, Set.empty[Long]),
+        s"hs != h60 of shinglesOf's shingles for $label")
     }
   }
 

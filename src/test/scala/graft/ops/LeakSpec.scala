@@ -98,4 +98,28 @@ class LeakSpec extends SparkSpec {
       assert(sc.getPersistentRDDs.isEmpty,
         s"releasePinned failed to drain after $name")
     }
+
+  test("prefixRank(pinInput = true) leaves a caller's cache entry on its input in place") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.storage.StorageLevel
+    Pinned.releaseAll(spark)
+    def input = spark.range(0, 500).selectExpr("id", "id % 7 AS v")
+    def ranks(r: PrefixSum.Ranked) =
+      r.df.select("id", "g_rank", "g_cum_excl").orderBy("id").collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
+    val order = Seq(col("v"), col("id"))
+    val want = ranks(PrefixSum.prefixRank(input, order, Some("v")))
+    val cached = input.persist(StorageLevel.MEMORY_ONLY)
+    try {
+      cached.count()
+      val got = ranks(PrefixSum.prefixRank(cached, order, Some("v"), pinInput = true))
+      assert(cached.storageLevel === StorageLevel.MEMORY_ONLY,
+        "prefixRank dropped the caller's cache entry on its input")
+      assert(got === want, "pinning must not change the ranks")
+      // an uncached input is still pinned for the call and released in it
+      val other = spark.range(0, 300).selectExpr("id", "id % 3 AS v")
+      PrefixSum.prefixRank(other, order, Some("v"), pinInput = true).df.count()
+      assert(other.storageLevel === StorageLevel.NONE, "prefixRank left its own pin behind")
+    } finally Pinned.releaseAll(spark)
+  }
 }

@@ -435,6 +435,36 @@ class PlanShapeSpec extends SparkSpec {
       docAggs.map(_.simpleString(200)).mkString("\n"))
   }
 
+  test("MinHash signatures run the native kernel: no higher-order functions, " +
+      "one shingle hash per signature projection") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayFilter, ArrayTransform, Expression, LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import graft.functions.{MinHashAffine, ShingleH60}
+    val docs = Dedup.corpus(spark, sfDir)
+    Seq("minhashSignatures" -> graft.api.GraftApi.minhashSignatures(docs),
+        "nearDupPairs" -> graft.api.GraftApi.nearDupPairs(docs)).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val exprs: Seq[Expression] = plan.collectWithSubqueries { case n => n.expressions }
+        .flatten.flatMap(_.collect { case e => e })
+      val hof = exprs.filter(e => e.isInstanceOf[LambdaFunction] || e.isInstanceOf[ArrayTransform] ||
+        e.isInstanceOf[ArrayFilter] || e.isInstanceOf[ArrayDistinct])
+      assert(hof.isEmpty, s"$name: interpreted higher-order functions in the plan: " +
+        hof.map(_.prettyName).distinct.mkString(", ") + "\n" + plan.toString.take(1500))
+      val sigProjects = plan.collect {
+        case p: Project if p.projectList.exists(_.exists(_.isInstanceOf[ShingleH60])) => p
+      }
+      assert(sigProjects.nonEmpty, s"$name: no graft_shingle_h60 projection\n$plan")
+      sigProjects.foreach { p =>
+        assert(p.projectList.map(_.collect { case h: ShingleH60 => h }.size).sum === 1,
+          s"$name: graft_shingle_h60 must appear once per signature projection\n$p")
+      }
+      // CollapseProject must not have copied the hashing into the four mins
+      val mins = exprs.collect { case m: MinHashAffine => m }
+      assert(mins.nonEmpty && mins.forall(!_.hs.exists(_.isInstanceOf[ShingleH60])),
+        s"$name: a minhash recomputes the shingle hashes\n$plan")
+    }
+  }
+
   test("pipe3 transform: no cartesian; drop-list anti-join and pack window " +
       "are shard-keyed (never a global single-partition sort)") {
     val sp = spark
