@@ -494,4 +494,59 @@ class StreamsSpec extends SparkSpec {
         assert(maxC >= Streams.St24AlarmCents)
     }
   }
+
+  test("st10 streaming MV merge equals the batch event_type aggregate bit-for-bit") {
+    // mv1's recompute contract on st10's own table: per-batch deltas
+    // summed into the stored aggregate must equal one batch aggregate
+    val live = Streams.st10(spark, sfDir).collect().map(_.toString).toSeq
+    val batch = graft.Tables.events(spark, sfDir)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(graft.ops.Money.cents(col("value"))).as("sum_c"))
+      .orderBy("event_type").collect().map(_.toString).toSeq
+    assert(live.nonEmpty)
+    assert(live === batch)
+  }
+
+  test("st16 streaming KMV sketch equals the batch apx6 sketch bit-for-bit") {
+    val live = Streams.st16(spark, sfDir).collect().map(_.toString).toSeq
+    val batch = graft.ops.ScaleOps.apx6(spark, sfDir)
+      .select("lang", "n_sk", "hk", "est").collect().map(_.toString).toSeq
+    assert(live.nonEmpty)
+    assert(live === batch)
+  }
+
+  test("st17 streaming decontamination gate equals the batch d19 probe bit-for-bit") {
+    val live = Streams.st17(spark, sfDir).collect().map(_.toString).toSeq
+    val batch = graft.ops.TextAnalysis.d19(spark, sfDir).collect().map(_.toString).toSeq
+    assert(live.nonEmpty)
+    assert(live === batch)
+  }
+
+  test("st18 streaming Benford counts equal the batch dq5 audit bit-for-bit") {
+    val live = Streams.st18(spark, sfDir).collect().map(_.toString).toSeq
+    val batch = graft.ops.Evaluation.dq5(spark, sfDir).collect().map(_.toString).toSeq
+    assert(live.nonEmpty)
+    assert(live === batch)
+  }
+
+  test("st28 streaming repetition audit equals the batch dq9 table bit-for-bit") {
+    val live = Streams.st28(spark, sfDir).collect().map(_.toString).toSeq
+    val batch = graft.ops.Evaluation.dq9(spark, sfDir).collect().map(_.toString).toSeq
+    assert(live.nonEmpty)
+    assert(live === batch)
+  }
+
+  test("bounded streams delete their checkpoint dir once the query has terminated") {
+    def ckpts(): Set[String] =
+      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).getOrElse(Array.empty)
+        .map(_.getName).filter(_.startsWith("graft_ckpt_")).toSet
+    // a merging monitor, a stateless per-batch writer, a memory-sink drain
+    Seq("st15" -> Streams.st15, "st17" -> Streams.st17, "st1" -> Streams.st1).foreach {
+      case (name, q) =>
+        val before = ckpts()
+        val result = q(spark, sfDir)
+        assert(ckpts() -- before === Set.empty[String], s"$name left a checkpoint dir behind")
+        assert(result.collect().nonEmpty, s"$name's result must not read its checkpoint")
+    }
+  }
 }
