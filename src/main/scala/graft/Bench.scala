@@ -58,32 +58,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events fixture's TIMESTAMP_NTZ ts normalizes through a
-      // session-timezone-dependent cast (Tables.normalizeEventTs) — pin
-      // UTC like Verify/SparkSpec so timings time the same plan
-      .config("spark.sql.session.timeZone", "UTC")
-      // Round-16 (guide §2.2/§2.4): let AQE re-optimize plan fragments
-      // UNDER cached frames, so a persisted intermediate (banded-candidate
-      // caches, iterative CC/epoch loops) materializes at data-sized
-      // partition counts instead of inheriting the static
-      // spark.sql.shuffle.partitions. Off by default only for cross-query
-      // cached-layout stability, which no graft query relies on (every
-      // layout-sensitive golden pins its layout with an explicit
-      // repartition(n, key), which AQE never rewrites — REPARTITION_BY_NUM
-      // origin). Full oracle re-verified under the flag (367/367); A/B at
-      // sf0.1: d5 2.60→1.80 s, mm8 4.16→3.12 s, d22 4.37→3.09 s,
-      // m7c 3.90→3.32 s, sweep-wide numbers in OPTIMIZATION_r16.md.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF: optional comma-separated k=v spark confs for
-    // config A/B sweeps (round-16 optimization); empty in driver runs.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val cpus = graft.api.GraftSession.envCpus
+    val spark = graft.api.GraftSession.local(cpus).getOrCreate()
     // ERROR, not WARN: streaming micro-batches emit per-batch WARN lines
     // (ResolveWriteToStream / MicroBatchExecution) that flooded the driver's
     // bounded output capture in round 3 and pushed the bench JSON line out of
@@ -108,7 +84,7 @@ object Bench {
     // `contaminated` even when its own samples agree.
     def sentinelProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 192000000L, 1L, cpus.toInt)
+      spark.range(0L, 192000000L, 1L, cpus)
         .selectExpr("sum(id * 2654435761 % 1000003) AS s").collect()
       (System.nanoTime() - t0) / 1e9
     }

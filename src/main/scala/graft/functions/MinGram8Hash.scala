@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: the SQL formulation (array_min over a per-position
   * transform) pays interpreted higher-order-function machinery PER
-  * CHARACTER — measured at sf1 (tools/D11Prof), 18.3 M positions cost
+  * CHARACTER — measured at sf1 (round 9), 18.3 M positions cost
   * 6.4 s even with the hash body removed, and ~9.5 s with it; this loop
   * does the same scan in milliseconds. The hash is pure 64-bit integer
   * arithmetic chosen to be reproducible VERBATIM in the DuckDB oracle

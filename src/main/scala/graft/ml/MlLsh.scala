@@ -227,7 +227,7 @@ object MlLsh {
     "lsh2_ml_brp_knn" -> lsh2,
   )
 
-  /** Frozen at sf0.01 by `graft.tools.FreezeSeededGoldens` (round 15):
+  /** Frozen at sf0.01 by `graft.tools.FreezeSeededGoldens` (round 15; src/test):
     * MinHashLSH/BRP hash families are engine-defined but SEEDED (seed 42),
     * so their outputs are bit-stable per Spark version — the f1c/m1b
     * precedent upgrades them from rows-only to hash-checked. SF-SPECIFIC

@@ -630,10 +630,9 @@ object MlPipelines {
     * on `train` AS-IS (4 partitions), exercising the production m1/m3
     * accumulation path (NB's aggregateByKey class-conditional sums,
     * OWLQN's treeAggregate gradients) instead of the coalesce(1) single
-    * left fold. Emits per-row raw scores alongside the argmax so the
-    * determinism probe ([[graft.tools.ProbeDistributedFit]]) can
-    * distinguish "bit-stable floats" from "stable argmax over wobbling
-    * floats". */
+    * left fold. Emits per-row raw scores alongside the argmax so a
+    * determinism check can distinguish "bit-stable floats" from "stable
+    * argmax over wobbling floats". */
   private[graft] def distributedPredictions[M <: org.apache.spark.ml.Model[M]](
       s: SparkSession, d: String,
       estimator: org.apache.spark.ml.Estimator[M],
@@ -674,8 +673,9 @@ object MlPipelines {
       .toDF("n_total", "n_train", "n_test", "n_overlap", "covers", "disjoint")
   }
 
-  /** Frozen at sf0.01 by `graft.tools.FreezeMlGolden` (round 15) —
-    * regenerate with that tool if the corpus fixture ever changes. */
+  /** Frozen at sf0.01 by `graft.tools.FreezeMlGolden` (round 15; in
+    * src/test) — regenerate with that tool if the corpus fixture ever
+    * changes. */
   val m1bSql: String =
     """SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(label AS BIGINT) AS label,
        |       CAST(prediction AS BIGINT) AS prediction
@@ -822,8 +822,9 @@ object MlPipelines {
        |  AS t(doc_id, label, prediction)
        |ORDER BY doc_id""".stripMargin
 
-  /** Frozen at sf0.01 by `graft.tools.FreezeMlGolden` (round 15) —
-    * regenerate with that tool if the corpus fixture ever changes. */
+  /** Frozen at sf0.01 by `graft.tools.FreezeMlGolden` (round 15; in
+    * src/test) — regenerate with that tool if the corpus fixture ever
+    * changes. */
   val m3bSql: String =
     """SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(label AS BIGINT) AS label,
        |       CAST(prediction AS BIGINT) AS prediction
@@ -976,7 +977,7 @@ object MlPipelines {
     * 4-partition train split exactly as the production m1/m3 entries do,
     * so the per-row hash check now covers the distributed accumulation
     * path (NB's aggregateByKey sums, OWLQN's treeAggregate gradients).
-    * `graft.tools.ProbeDistributedFit` measured the fit bit-identical
+    * A round-16 probe measured the fit bit-identical
     * over 6 same-session runs AND across fresh JVMs (raw probability /
     * rawPrediction vectors compared stringified, not just argmax) before
     * these goldens froze. m1c inherits m1b's constant-0 degeneracy (see
@@ -998,7 +999,7 @@ object MlPipelines {
     * regression that also predicts 0, the score gap is a CONTINUOUS
     * function of the fitted model: a one-count change in any class-
     * conditional sum moves some row's e6 gap. Safe to freeze because
-    * ProbeDistributedFit measured the underlying vectors bit-identical
+    * the round-16 probe measured the underlying vectors bit-identical
     * across runs and JVMs; e6 rounding adds slack on top.
     * Both emit round((raw[1] − raw[0]) · 1e6): for NB that is the
     * class-1-vs-class-0 log-posterior gap (negative everywhere at the

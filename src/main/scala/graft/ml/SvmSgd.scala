@@ -81,7 +81,7 @@ object SvmSgd {
   /** Registry query: per-epoch training summary, w_norm rounded to 6 dp at
     * the output boundary so the entry can freeze as a VALUES golden (raw
     * float sums carry last-ulp partition-merge wobble; the rounded value
-    * is stable — `graft.tools.FreezeSeededGoldens` runs the loop twice and
+    * is stable — `graft.tools.FreezeSeededGoldens` (src/test) runs the loop twice and
     * requires bit-identical output before printing). The summaries frame
     * is a local relation (built from driver-side scalars), so the final
     * weights cache — whose handle this path discards — can be released
@@ -95,7 +95,7 @@ object SvmSgd {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map("m7c_svm_corrected_epochs" -> query)
 
-  /** Frozen at sf0.01 by `graft.tools.FreezeSeededGoldens` (round 15):
+  /** Frozen at sf0.01 by `graft.tools.FreezeSeededGoldens` (round 15; src/test):
     * the epoch loop is deterministic given the gate corpus (integer
     * misclassification counts; w_norm rounded 6 dp at the boundary), so
     * the per-epoch summary freezes as a VALUES golden — SF-specific by

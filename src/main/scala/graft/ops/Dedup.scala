@@ -1243,9 +1243,9 @@ object Dedup {
     // on this 8-byte comparison — pairs that would otherwise ride the
     // distinct AND both text joins just to fail the verify).
     //
-    // ROUND-9 cost rework, from measured attribution (tools/D11Prof at
-    // sf1: the mid key's per-character SQL machinery was 9.5 s of the
-    // 19 s warm total — and 6.4 s of that was the interpreted
+    // ROUND-9 cost rework, from measured attribution (a per-stage
+    // profile at sf1: the mid key's per-character SQL machinery was 9.5 s
+    // of the 19 s warm total — and 6.4 s of that was the interpreted
     // higher-order-function overhead alone, with the md5 body REMOVED,
     // so no SQL reformulation can win): (a) the min-gram is now the
     // native [[graft.functions.MinGram8Hash]] expression — one fused

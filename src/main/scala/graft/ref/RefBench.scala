@@ -2,14 +2,13 @@ package graft.ref
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Matched-workload baseline replay: the reference's published PySpark
   * numbers (BASELINE.md: NB 72.05 s, LinearSVC 78.78 s) were measured on
   * the largest of 10 Sentiment140 subsets (100 k – 1 M rows,
   * `reference/README.md:40-43`; report §3.1 p.15, Tables 4.1/4.2 p.21).
   * This main replicates the reference's OWN fixture
-  * (`input/test1/tweets.csv`, 24,999 rows) ×reps and runs
+  * (`input/test1/tweets.csv`, 24,999 rows; `SPARK_GRAFT_TWEETS` names
+  * it, there is no default) ×reps and runs
   * `RefPipeline.mlPipeline` — same parse, same clean dialect, same
   * Tokenizer→HashingTF→IDF→estimator stages, same randomSplit(75/25,
   * seed 1234) — end-to-end on local[32], giving the DIRECT throughput
@@ -27,15 +26,12 @@ import org.apache.spark.sql.SparkSession
   * numbers benefited from a warmed YARN session. */
 object RefBench {
   def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_TWEETS", "/root/reference/input/test1/tweets.csv")
+    val src = sys.env.getOrElse("SPARK_GRAFT_TWEETS", "")
+    require(Files.isRegularFile(Paths.get(src)),
+      s"set SPARK_GRAFT_TWEETS to the reference's tweets.csv (got '$src')")
     val curve = sys.env.getOrElse("SPARK_GRAFT_CURVE", "4,10,40")
       .split(",").map(_.trim.toInt).toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.GraftSession.local(graft.api.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 

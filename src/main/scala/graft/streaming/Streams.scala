@@ -711,37 +711,7 @@ object Streams {
     * construction (the same property the batch join relies on) — a
     * production deployment adds d5's bucket cap + a watermark-based
     * state TTL, both omitted here to keep the batch equivalence exact. */
-  val st12: Q = (s, d) => {
-    val sp = s
-    import sp.implicits._
-    val srcDir = stagedNeardupSrc(s, d)
-    val schema = s.read.parquet(srcDir).schema
-    val banded = graft.ops.Dedup.minhashBandKeysOf(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", NeardupFilesPerBatch.toString)
-        .parquet(srcDir))
-      .as[BandRow]
-    val pairs = banded.groupByKey(_.bucket)
-      .flatMapGroupsWithState[Seq[Long], PairOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, it: Iterator[BandRow], state: GroupState[Seq[Long]]) =>
-          val seen = state.getOption.getOrElse(Seq.empty)
-          val incoming = it.map(_.doc_id).toSeq.distinct.sorted
-          val out = scala.collection.mutable.ArrayBuffer.empty[PairOut]
-          var acc = seen
-          incoming.foreach { id =>
-            if (!acc.contains(id)) {
-              acc.foreach(o => out += PairOut(math.min(o, id), math.max(o, id)))
-              acc = acc :+ id
-            }
-          }
-          state.update(acc)
-          out.iterator
-      }
-    drain(s, pairs.toDF(), "st12_out", OutputMode.Append())
-      .distinct()
-      .orderBy("id_a", "id_b")
-  }
+  val st12: Q = (s, d) => bucketPairs(s, d, Int.MaxValue, "st12_out")
   val st12Sql: String = graft.ops.Dedup.bandCandidatePairsSql
 
   /** st13's per-bucket state cap — same magnitude as d5's batch skew
@@ -764,9 +734,14 @@ object Streams {
     * would also set a watermark state TTL; the fixture documents carry
     * no event time, so that knob has nothing observable to do here and
     * is omitted. */
-  val st13: Q = (s, d) => {
-    val sp = s
-    import sp.implicits._
+  val st13: Q = (s, d) => bucketPairs(s, d, St13MaxBucket, "st13_out")
+
+  /** st12's and st13's one body: the staged near-dup replay's band keys,
+    * grouped by bucket, with the bucket's doc_id list as state. A new
+    * arrival pairs with every member, then joins the bucket while it
+    * holds fewer than `cap` ids (st12 passes `Int.MaxValue`: no cap). */
+  private def bucketPairs(s: SparkSession, d: String, cap: Int, name: String): DataFrame = {
+    import s.implicits._
     val srcDir = stagedNeardupSrc(s, d)
     val schema = s.read.parquet(srcDir).schema
     val banded = graft.ops.Dedup.minhashBandKeysOf(
@@ -784,7 +759,7 @@ object Streams {
           var acc = seen
           incoming.foreach { id =>
             // the cap: a full bucket ignores new members entirely
-            if (!acc.contains(id) && acc.size < St13MaxBucket) {
+            if (!acc.contains(id) && acc.size < cap) {
               acc.foreach(o => out += PairOut(math.min(o, id), math.max(o, id)))
               acc = acc :+ id
             }
@@ -792,7 +767,7 @@ object Streams {
           state.update(acc)
           out.iterator
       }
-    drain(s, pairs.toDF(), "st13_out", OutputMode.Append())
+    drain(s, pairs.toDF(), name, OutputMode.Append())
       .distinct()
       .orderBy("id_a", "id_b")
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: `runMain graft.tools.GenScale
@@ -43,11 +43,7 @@ object GenScale {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.GraftSession.local(graft.api.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

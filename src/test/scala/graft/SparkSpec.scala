@@ -6,12 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.api.GraftSession.local(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
       .getOrCreate()

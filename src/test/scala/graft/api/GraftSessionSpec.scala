@@ -37,4 +37,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(confs("spark.sql.adaptive.enabled") === "true")
     assert(confs("spark.sql.adaptive.skewJoin.enabled") === "true")
   }
+
+  test("local confs: one shuffle partition per core, UTC, AQE under cache, extensions") {
+    assert(GraftSession.localConfs(4) === Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.ui.enabled" -> "false"))
+  }
 }

@@ -111,6 +111,14 @@ class GraftFunctionsSpec extends SparkSpec {
     } finally spark.experimental.extraOptimizations = before
   }
 
+  test("the shared test session runs GraftExtensions: graft_hamming(x, x) folds to 0") {
+    // no register call and no extraOptimizations: the session's own
+    // extensions must supply both the function and the rule
+    val plan = spark.range(3).selectExpr("CAST(id AS STRING) AS x")
+      .selectExpr("graft_hamming(x, x) AS h").queryExecution.optimizedPlan.toString
+    assert(plan.contains("0 AS h#") && !plan.contains("graft_hamming"), plan)
+  }
+
   test("SimplifyGraftHamming preserves NULL on nullable children") {
     GraftFunctions.register(spark)
     import spark.implicits._

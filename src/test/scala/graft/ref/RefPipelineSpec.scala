@@ -1,60 +1,74 @@
 package graft.ref
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+
 import graft.SparkSpec
 
-/** Golden end-to-end on the reference's own corpus
-  * (`reference/input/test1/tweets.csv`, 25,000 tweets) — SURVEY §5.
-  * Published comparables (BASELINE.md, 100k–1M-row subsets): PySpark NB
-  * acc 0.731 / F1 0.732, SVM acc 0.762 / F1 0.758; Hadoop NB acc 0.644.
-  * The in-repo subset is smaller and splits differ by engine RNG, so
-  * tolerances are loose — the test guards against wiring bugs (labels
-  * flipped, split leakage, degenerate predictions), not exact parity. */
-class RefPipelineSpec extends SparkSpec {
+/** Golden end-to-end on a seeded Sentiment140-positional fixture — SURVEY
+  * §5. `graftbench.Gen.sentimentCsv` (the benchmark's generator, compiled
+  * into the tests by build.sbt) writes 8,000 tweets as 4 part files. They
+  * carry every quirk the parser and cleaner handle: quoted text with inner
+  * commas, HTML entities, mentions, hashtags, URLs, digits, tweets empty
+  * after cleaning, and both labels. The goldens are exact counts on that
+  * fixture, so a change to parse, clean, split, featurize or fit moves
+  * them. The fixture is not Sentiment140: accuracy parity with the
+  * published numbers (BASELINE.md) is not asserted here. */
+class RefPipelineSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val Corpus = "/root/reference/input/test1/tweets.csv"
+  private lazy val dir = Files.createTempDirectory("graft_refpipe")
+  private lazy val Corpus = dir.resolve("tweets").toString
 
-  test("parse: 25,000 rows, both labels present, text non-empty") {
-    // 25,000 true lines (the file has no trailing newline; `wc -l` says 24,999)
-    val df = RefPipeline.parse(spark, Corpus).cache()
-    assert(df.count() === 25000L)
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graftbench.Gen.sentimentCsv(seed = 14L, n = 8000, parts = 4, dir.resolve("tweets"))
+  }
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(dir.toFile) finally super.afterAll()
+
+  /** The hand-rolled NB's (tp, fp, tn, fn) on the fixture's 2,000 test tweets. */
+  private val HandNb = (711L, 332L, 715L, 242L)
+
+  /** (tp, fp, tn, fn) of a metrics row. */
+  private def confusion(m: Row): (Long, Long, Long, Long) =
+    (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))
+
+  test("parse: every line is a row, both labels, the empty-after-clean tweets") {
+    val df = RefPipeline.parse(spark, Corpus)
+    assert(df.count() === 8000L)
     val labels = df.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    assert(labels.keySet === Set(0.0, 1.0))
-    assert(labels.values.forall(_ > 5000L), s"both classes well-populated: $labels")
-    assert(df.filter("length(text) = 0").count() < 100)
+    assert(labels === Map(0.0 -> 4026L, 1.0 -> 3974L))
+    // the generator's mention/url/digits-only tweets clean to ""
+    assert(RefPipeline.cleaned(spark, Corpus)
+      .filter(length(trim(col("clean"))) === 0).count() === 157L)
   }
 
-  test("hand-rolled NB (log-space) beats chance and lands near baseline") {
-    val m = RefPipeline.handRolledNb(spark, Corpus).head()
-    val (tp, fp, tn, fn) = (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))
-    val acc = m.getDouble(4)
-    assert(tp + fp + tn + fn > 5000L, "test split populated")
-    assert(acc > 0.60 && acc < 0.90, s"accuracy $acc vs Hadoop-NB 0.644 / PySpark-NB 0.731")
-    assert(tp > 0 && tn > 0, "predicts both classes")
+  test("hand-rolled NB (log-space): exact confusion counts") {
+    assert(confusion(RefPipeline.handRolledNb(spark, Corpus).head()) === HandNb)
   }
 
-  test("MLlib NB pipeline reproduces the reference ballpark") {
-    val m = RefPipeline.mlPipeline(spark, Corpus, svm = false).head()
-    val acc = m.getDouble(4); val f1 = m.getDouble(7)
-    assert(acc > 0.63 && acc < 0.85, s"acc $acc vs published 0.731")
-    assert(f1 > 0.60, s"f1 $f1 vs published 0.732")
+  test("MLlib NB pipeline: exact confusion counts") {
+    assert(confusion(RefPipeline.mlPipeline(spark, Corpus, svm = false).head()) ===
+      ((646L, 290L, 729L, 285L)))
   }
 
-  test("MLlib LinearSVC pipeline reproduces the reference ballpark") {
-    val m = RefPipeline.mlPipeline(spark, Corpus, svm = true).head()
-    val acc = m.getDouble(4)
-    assert(acc > 0.65 && acc < 0.88, s"acc $acc vs published 0.762")
+  test("MLlib LinearSVC pipeline: exact confusion counts") {
+    assert(confusion(RefPipeline.mlPipeline(spark, Corpus, svm = true).head()) ===
+      ((695L, 342L, 677L, 236L)))
   }
 
-  test("product-mode (bug-compatible) scoring ≈ log-space on short tweets") {
-    import org.apache.spark.sql.functions._
+  test("product-mode (bug-compatible) scoring agrees with log-space on every test tweet") {
     val prod = RefPipeline.handRolledNbProductMode(spark, Corpus)
-    val n = prod.count()
-    val underflowed = prod.filter(col("p_pos") === 0.0 && col("p_neg") === 0.0).count()
-    // tweets are short: products rarely underflow, so the quirk mode agrees
-    // with log-space almost everywhere (the divergence IS the quirk)
-    assert(underflowed < n / 100, s"$underflowed of $n fully underflowed")
-    val acc = RefPipeline.metricsOf(prod.select("prediction", "label")).head().getDouble(4)
-    assert(acc > 0.60, s"product-mode accuracy $acc")
+    // tweets are short: no product underflows, so the quirk mode scores
+    // all 2,000 test tweets exactly as log-space does
+    assert(prod.count() === 2000L)
+    assert(prod.filter(col("p_pos") === 0.0 && col("p_neg") === 0.0).count() === 0L)
+    assert(confusion(RefPipeline.metricsOf(prod.select("prediction", "label")).head()) === HandNb)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -24,21 +22,14 @@ import org.apache.spark.sql.functions._
   *     population minus non-representative members. Compared exactly
   *     against the d12 registry entry's output.
   *
-  * Usage: `runMain graft.tools.CrossCheckD12Sf10 <sfDir> <outJson>`. */
+  * Usage: `sbt "Test/runMain graft.tools.CrossCheckD12Sf10 <sfDir> <outJson>"`.
+  * Tier-1 runs `check` at sf0.001 (`CrossCheckSpec`). */
 object CrossCheckD12Sf10 {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val out = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+  import CrossCheckSf10.Check
 
+  def main(args: Array[String]): Unit = CrossCheckSf10.run(args, check)
+
+  def check(spark: SparkSession, dir: String): Seq[Check] = {
     // the d7 population, re-stated here from its spec (base = vec_id%5,
     // quantize q_i = round(e_i*1000), drop zero-norm, shells = %10 ids
     // +100000 with q(0)+50) — built with plain column ops so a d7-side
@@ -70,7 +61,7 @@ object CrossCheckD12Sf10 {
     val bQs = spark.sparkContext.broadcast(qs)
     val bNrm = spark.sparkContext.broadcast(norms)
     // brute force: distribute the row index, each task sweeps j > i
-    val bf = spark.sparkContext.parallelize(0 until n, cpus.toInt * 8)
+    val bf = spark.sparkContext.parallelize(0 until n, spark.sparkContext.defaultParallelism * 8)
       .flatMap { i =>
         val ids = bIds.value; val qs = bQs.value; val nrm = bNrm.value
         val qi = qs(i); val ni = nrm(i)
@@ -126,20 +117,11 @@ object CrossCheckD12Sf10 {
     (expectedSurvivors -- got).take(3).foreach(x => println(s"[d12x]   missing: $x"))
     (got -- expectedSurvivors).take(3).foreach(x => println(s"[d12x]   extra: $x"))
 
-    val json =
-      s"""{
-         |  "sf_dir": "$dir",
-         |  "population": $n,
-         |  "d7_pairs_vs_bruteforce": {"bruteforce": ${bf.size},
-         |    "banded": ${banded.size}, "missed": ${missed.size},
-         |    "invented": ${invented.size}, "pass": $pairsPass},
-         |  "d12_survivors_vs_unionfind": {"expected": ${expectedSurvivors.size},
-         |    "got": ${got.size}, "dup_members": ${dupMembers.size},
-         |    "pass": $d12Pass}
-         |}
-         |""".stripMargin
-    Files.writeString(Paths.get(out), json)
-    spark.stop()
-    println(s"[d12x] wrote $out")
+    Seq(
+      Check("d7_pairs_vs_bruteforce", s""""population": $n, "bruteforce": ${bf.size}, """ +
+        s""""banded": ${banded.size}, "missed": ${missed.size}, "invented": ${invented.size}""",
+        pairsPass),
+      Check("d12_survivors_vs_unionfind", s""""expected": ${expectedSurvivors.size}, """ +
+        s""""got": ${got.size}, "dup_members": ${dupMembers.size}""", d12Pass))
   }
 }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
+
 /** Scale-correctness cross-check for the two query classes the DuckDB
   * oracle cannot reach at sf10 (round-14 verdict item 3):
   *
@@ -28,23 +30,31 @@ import org.apache.spark.sql.functions._
   * rankings) is re-derived in plain driver Scala from the two engine
   * rankings for the sampled queries.
   *
-  * Usage: `runMain graft.tools.CrossCheckSf10 <sfDir> <outJson>`.
+  * Usage: `sbt "Test/runMain graft.tools.CrossCheckSf10 <sfDir> <outJson>"`.
   * Writes {"d8_vs_d18": {...}, "d23_via_d18": {...},
   * "sim1_recompute": {...}, "sim11_recompute": {...}} with pass flags.
+  * Tier-1 runs `check` at sf0.001 (`CrossCheckSpec`).
   */
 object CrossCheckSf10 {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val out = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** One cross-check: its JSON fields and its pass flag. */
+  final case class Check(name: String, fields: String, pass: Boolean)
 
+  def main(args: Array[String]): Unit = run(args, check)
+
+  /** `<sfDir> <outJson>`: runs `check` on a local session and writes the
+    * checks as one JSON object. */
+  private[tools] def run(args: Array[String], check: (SparkSession, String) => Seq[Check]): Unit = {
+    val (dir, out) = (args(0), args(1))
+    val spark = GraftSession.local(GraftSession.envCpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val checks = try check(spark, dir) finally spark.stop()
+    val body = checks.map(c => s"""  "${c.name}": {${c.fields}, "pass": ${c.pass}}""")
+    Files.writeString(Paths.get(out),
+      (s"""  "sf_dir": "$dir"""" +: body).mkString("{\n", ",\n", "\n}\n"))
+    println(s"[crosscheck] wrote $out")
+  }
+
+  def check(spark: SparkSession, dir: String): Seq[Check] = {
     // ---- 1. d8 == d18 row equality (full outer join on the unique key) ----
     // d18's cluster pipeline is the expensive leg at sf10, and it feeds
     // BOTH the equality join and the d23 re-derivation below — persist ONE
@@ -177,20 +187,13 @@ object CrossCheckSf10 {
     val rboPass = rboMismatch == 0 && rboGot.nonEmpty
     println(s"[crosscheck] sim11 queries=${qidSet.size} mismatched=$rboMismatch pass=$rboPass")
 
-    val json =
-      s"""{
-         |  "sf_dir": "$dir",
-         |  "d8_vs_d18": {"rows_d8": $rowsD8, "rows_d18": $rowsD18,
-         |    "mismatched": $ccMismatch, "pass": $ccPass},
-         |  "d23_via_d18": {"rows": ${d23.size}, "pass": $d23Pass},
-         |  "sim1_recompute": {"queries_checked": ${qidSet.size}, "k": $K,
-         |    "mismatched_queries": $simMismatch, "pass": $simPass},
-         |  "sim11_recompute": {"queries_checked": ${qidSet.size},
-         |    "mismatched_queries": $rboMismatch, "pass": $rboPass}
-         |}
-         |""".stripMargin
-    Files.writeString(Paths.get(out), json)
-    spark.stop()
-    println(s"[crosscheck] wrote $out")
+    Seq(
+      Check("d8_vs_d18", s""""rows_d8": $rowsD8, "rows_d18": $rowsD18, """ +
+        s""""mismatched": $ccMismatch""", ccPass),
+      Check("d23_via_d18", s""""rows": ${d23.size}""", d23Pass),
+      Check("sim1_recompute", s""""queries_checked": ${qidSet.size}, "k": $K, """ +
+        s""""mismatched_queries": $simMismatch""", simPass),
+      Check("sim11_recompute", s""""queries_checked": ${qidSet.size}, """ +
+        s""""mismatched_queries": $rboMismatch""", rboPass))
   }
 }

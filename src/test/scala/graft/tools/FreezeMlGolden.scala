@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ml.MlPipelines
 
 /** One-shot generator for the m1b/m3b frozen prediction goldens
@@ -9,15 +7,11 @@ import graft.ml.MlPipelines
   * TWICE at the given sfDir, asserts the two runs are bit-identical
   * (the determinism the pinning buys), and prints the rows as a
   * DuckDB VALUES block ready to paste into `MlPipelines.m1bSql` /
-  * `m3bSql`. Usage: runMain graft.tools.FreezeMlGolden /root/testdata/sf0.01 */
+  * `m3bSql`. Usage: sbt "Test/runMain graft.tools.FreezeMlGolden /root/testdata/sf0.01" */
 object FreezeMlGolden {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-freeze-ml-golden").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.api.GraftSession.local(graft.api.GraftSession.envCpus).getOrCreate()
     try {
       for ((name, q) <- Seq("m1b" -> MlPipelines.queries("m1b_ml_nb_predictions"),
         "m3b" -> MlPipelines.queries("m3b_ml_svc_predictions"))) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the seeded-but-engine-defined goldens
   * (round 15): lsh1 (MinHashLSH seed 42 → dist histogram), lsh2 (BRP
   * kNN seed 42) and m7c (corrected SVM epochs, w_norm rounded 6 dp).
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * unless both runs are bit-identical. Doubles print via Double.toString
   * (shortest roundtrip), which DuckDB parses back to the same bits —
   * the bit-exact repr() compare in tools/oracle_check.py then holds.
-  * Usage: runMain graft.tools.FreezeSeededGoldens /root/testdata/sf0.01 */
+  * Usage: sbt "Test/runMain graft.tools.FreezeSeededGoldens /root/testdata/sf0.01" */
 object FreezeSeededGoldens {
   private def lit(v: Any): String = v match {
     case d: java.lang.Double => d.toString
@@ -18,11 +16,7 @@ object FreezeSeededGoldens {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-freeze-seeded-goldens").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.api.GraftSession.local(graft.api.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val entries = Seq(
       "lsh1" -> graft.ml.MlLsh.queries("lsh1_ml_minhash_join"),
